@@ -50,6 +50,17 @@ def _keyed_spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
+def _dot(a, b):
+    """Dot product of two array columns as a JVM higher-order fold: per-
+    element double products summed left to right from 0.0 (the fold order
+    the oracle mirrors reproduce)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 # ---------------------------------------------------------------------------
 # O3 — URL filter as pure Catalyst predicates (UrlFilter.scala:36-44):
 # length gate + must-match regex, pushed into the scan.
@@ -590,21 +601,22 @@ def _doc_shingle_arrays(docs: DataFrame) -> DataFrame:
     return d.select("doc_id", F.array_distinct(sh).alias("shingles"))
 
 
-def _doc_shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle): distinct word 3-grams — per-row array transform,
-    NO window/shuffle (tokens never leave their row before the distinct)."""
-    return _doc_shingles_raw(docs).distinct()
-
-
 def _minhash_melted(
     shingles: DataFrame, perms: int, bands: int, salt: str
 ) -> DataFrame:
-    """(doc_id, shingle) set → banded MinHash signature, melted to one row
+    """(doc_id, shingle) rows → banded MinHash signature, melted to one row
     per (doc_id, band, bucket-hash): ``perms`` minhashes (xxhash64 with
     per-permutation salt, min per doc) → ``bands`` × (perms/bands) row
-    groups, each hashed to a 64-bit bucket id.  Shared by the self-join
-    near-dup path (``_lsh_jaccard_pairs``) and the bipartite
-    batch-vs-corpus path (``_lsh_bipartite_pairs``)."""
+    groups, each hashed to a 64-bit bucket id.  Per-doc duplicate shingles
+    are fine: min is duplicate-insensitive, so the signature equals the
+    distinct-set form.
+
+    The permutation hashes are flat codegen'd projections (a higher-order
+    transform() with xxhash64 inside falls back to interpreted per-element
+    evaluation — measured ~40× slower at sf1.0), and the only exchange is
+    the groupBy(min) whose map-side partial aggregation ships just
+    ``perms`` longs per doc per partition; the shingle strings never
+    shuffle."""
     rows_per_band = perms // bands
     hashes = shingles.select(
         "doc_id",
@@ -633,72 +645,66 @@ def _minhash_melted(
     ).select("doc_id", "bb.b", "bb.bucket")
 
 
-def _melted_from_raw(
-    raw: DataFrame, perms: int, bands: int, salt: str
+def _capped_bucket_pairs(
+    keyed: DataFrame, keys: list[str], member, cap: int
 ) -> DataFrame:
-    """Banded MinHash signature from RAW (doc_id, shingle) rows (per-doc
-    duplicates allowed — min is duplicate-insensitive, so the signature is
-    identical to the distinct-set form), melted to (doc_id, b, bucket).
-    The permutation hashes are flat codegen'd projections (a higher-order
-    transform() with xxhash64 inside falls back to interpreted per-element
-    evaluation — measured ~40× slower at sf1.0), and the only exchange is
-    the groupBy(min) whose map-side partial aggregation ships just
-    ``perms`` longs per doc per partition; the shingle STRINGS never
-    shuffle (the old global .distinct() shipped them all)."""
-    rows_per_band = perms // bands
-    hashes = raw.select(
-        "doc_id",
-        *[
-            F.xxhash64(F.concat(F.lit(f"{salt}{i}|"), F.col("shingle"))).alias(f"h{i}")
-            for i in range(perms)
-        ],
+    """The one bucket-pair enumerator behind every banded near-dup query
+    (word and char-n-gram MinHash, batch-vs-corpus MinHash, pHash):
+    ``keyed`` rows carry the bucket ``keys``; every bucket holding 2..``cap``
+    rows yields each pair of its ``member`` values once, as (lo, hi) with
+    lo before hi in ``member`` sort order.  A pair sharing several buckets
+    repeats — callers distinct after their own projection.
+
+    Hot-bucket bound: the member count is a window over the bucket key, so
+    buckets above ``cap`` (boilerplate docs or flat images all hashing
+    together) are dropped BEFORE collect_list and never materialize a
+    member list; the aggregate reuses the window's exchange.  Surviving
+    lists are sorted and enumerated in-row — at most cap²/2 pairs per
+    bucket, no bucket self-join."""
+    ct = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    ms = (
+        keyed.select(*keys, member.alias("_m"), ct.alias("_ct"))
+        .where((F.col("_ct") >= 2) & (F.col("_ct") <= cap))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("_m")).alias("ms"))
     )
-    sig = hashes.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(perms)]
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("b"),
-            F.xxhash64(
-                F.concat_ws(
-                    "|", F.lit(b),
-                    *[F.col(f"m{rows_per_band * b + r}") for r in range(rows_per_band)],
-                )
-            ).alias("bucket"),
+    pair_arr = F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), F.size("ms") - 2),
+            lambda i: F.transform(
+                F.sequence(i + 1, F.size("ms") - 1),
+                lambda j: F.struct(
+                    F.get("ms", i).alias("lo"), F.get("ms", j).alias("hi")
+                ),
+            ),
         )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", "bb.b", "bb.bucket")
+    )
+    return ms.select(F.explode(pair_arr).alias("p")).select("p.lo", "p.hi")
 
 
 def _lsh_jaccard_pairs(
     docs: DataFrame, build_raw, build_arr,
-    perms: int, bands: int, cap: int, salt: str
+    perms: int, bands: int, cap: int, salt: str, is_batch=None,
 ) -> DataFrame:
-    """Shared banded-MinHash candidate generation + exact-Jaccard confirm —
-    entirely Catalyst built-ins.  ``build_raw``: docs → raw (doc_id,
-    shingle) rows (duplicates fine — feeds the duplicate-insensitive
-    signature); ``build_arr``: docs → (doc_id, distinct shingle array)
-    (feeds the in-row Jaccard confirm).
+    """Banded-MinHash candidate pairs + exact-Jaccard confirm — entirely
+    Catalyst built-ins.  ``build_raw``: docs → raw (doc_id, shingle) rows
+    (duplicates fine — feeds the duplicate-insensitive signature);
+    ``build_arr``: docs → (doc_id, distinct shingle array) (feeds the
+    in-row Jaccard confirm).
 
-    raw shingles → banded signature (``_melted_from_raw``: codegen'd
-    hashes, one partial-agg groupBy) → ONE bucket groupBy collecting member
-    lists → in-row (a < b) pair enumeration → distinct pairs →
-    exact-Jaccard confirm via array_intersect over the candidate docs'
-    arrays only.
+    raw shingles → banded signature (``_minhash_melted``) → capped bucket
+    pairs (``_capped_bucket_pairs``) → distinct (doc_a, doc_b) pairs,
+    doc_a < doc_b → exact-Jaccard confirm (``_jaccard_confirm_arrays``).
 
-    100-TB shape: the bucket groupBy replaces the all-pairs product; hot
-    buckets (empty/boilerplate docs all hashing together) are CAPPED at
-    ``cap`` members and dropped above it, bounding any bucket's quadratic
-    blowup (pair lists are ≤ cap²/2 per bucket).  The confirm semi-joins
-    the corpus down to candidate docs BEFORE shingling, so full-corpus text
-    is scanned exactly twice (signatures + confirm filter) and never
-    shuffled.  Round 6: this replaced a 104-Exchange plan (explode +
-    global distinct + 3× recomputed signature subtrees + bucket self-join)
-    with a 2-shuffle plan — set-identical output (same hashes, same caps,
-    same integer Jaccard)."""
+    ``is_batch`` (a predicate over ``doc_id``) switches to batch-vs-corpus:
+    only pairs with exactly one batch end are kept, oriented doc_a = batch,
+    doc_b = corpus — the ingest-pass edges, without re-pairing the corpus
+    with itself.
+
+    100-TB shape: buckets replace the all-pairs product and the cap bounds
+    each bucket's quadratic blowup.  The confirm semi-joins the corpus down
+    to candidate docs BEFORE shingling, so full-corpus text is scanned
+    exactly twice (signatures + confirm filter) and never shuffled."""
     # spread the corpus before the hash-heavy signature pipeline: the
     # driver-generated parquet has 1-2 row groups, so without this the
     # explode + 8-permutation hashing runs on ≤2 of the session's cores
@@ -708,30 +714,27 @@ def _lsh_jaccard_pairs(
     spread = docs.repartition(
         docs.sparkSession.sparkContext.defaultParallelism
     )
-    melted = _melted_from_raw(build_raw(spread), perms, bands, salt)
-    members = (
-        melted.groupBy("b", "bucket")
-        .agg(F.collect_list("doc_id").alias("ms"))
-        .where((F.size("ms") >= 2) & (F.size("ms") <= cap))
-        .select(F.array_sort("ms").alias("ms"))
-    )
-    # in-row (a < b) enumeration over the sorted member list — the same
-    # pair set the old bucket self-join produced, without rejoining
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("ms") - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size("ms") - 1),
-                lambda j: F.struct(
-                    F.get("ms", i).alias("doc_a"), F.get("ms", j).alias("doc_b")
-                ),
-            ),
+    melted = _minhash_melted(build_raw(spread), perms, bands, salt)
+    keys = ["b", "bucket"]
+    if is_batch is None:
+        pairs = _capped_bucket_pairs(melted, keys, F.col("doc_id"), cap).select(
+            F.col("lo").alias("doc_a"), F.col("hi").alias("doc_b")
         )
-    )
+    else:
+        member = F.struct("doc_id", is_batch.alias("is_batch"))
+        lo_batch = F.col("lo.is_batch")
+        pairs = (
+            _capped_bucket_pairs(melted, keys, member, cap)
+            .where(lo_batch != F.col("hi.is_batch"))
+            .select(
+                F.when(lo_batch, F.col("lo.doc_id"))
+                .otherwise(F.col("hi.doc_id")).alias("doc_a"),
+                F.when(lo_batch, F.col("hi.doc_id"))
+                .otherwise(F.col("lo.doc_id")).alias("doc_b"),
+            )
+        )
     pairs = (
-        members.select(F.explode(pair_arr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
+        pairs.distinct()
         # pairs feeds three downstream subtrees (candidate-doc semi-join +
         # two broadcast joins); an eager localCheckpoint evaluates the
         # signature pipeline ONCE instead of once per subtree (the tiny
@@ -774,51 +777,6 @@ def _jaccard_confirm_arrays(
             F.floor(
                 F.lit(1000) * inter_ct
                 / (F.size("sh_a") + F.size("sh_b") - inter_ct)
-            ).cast("long").alias("jaccard_milli"),
-        )
-    )
-
-
-def _jaccard_confirm(shingles: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact set-Jaccard (integer milli) for candidate (doc_a, doc_b)
-    pairs over a (doc_id, shingle) table.  Candidate-pair tables are tiny
-    relative to the corpus, so every join here broadcasts the pair side
-    INTO the shingle scan — the corpus shingle table never shuffles."""
-    # exact-Jaccard confirm: candidate pairs only (pairs ≪ corpus → broadcast)
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    # semi-join the doc_b shingle side down to candidate docs FIRST (the
-    # tiny pair-doc set broadcast into the shingle scan), so the
-    # (doc_b, shingle) equi-join below shuffles only candidate docs'
-    # shingles — never the full corpus shingle table
-    sb = (
-        shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-        .join(F.broadcast(pairs.select("doc_b").distinct()), "doc_b", "semi")
-    )
-    inter = (
-        F.broadcast(pairs).join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter_ct"))
-    )
-    confirmed = pairs.join(inter, ["doc_a", "doc_b"], "left").na.fill({"inter_ct": 0})
-    # sizes is O(corpus) — broadcast the (small) pair table INTO it, twice
-    return (
-        sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-        .join(F.broadcast(confirmed), "doc_a")
-        .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-                .join(F.broadcast(confirmed.select("doc_b").distinct()), "doc_b")
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.floor(
-                F.lit(1000) * F.col("inter_ct")
-                / (F.col("na") + F.col("nb") - F.col("inter_ct"))
             ).cast("long").alias("jaccard_milli"),
         )
     )
@@ -876,12 +834,6 @@ def _doc_char_ngram_arrays(docs: DataFrame, n: int) -> DataFrame:
     return d.select("doc_id", F.array_distinct(grams).alias("shingles"))
 
 
-def _doc_char_ngrams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shingle): distinct CHARACTER n-grams — per-row substring
-    transform, no shuffle before the distinct."""
-    return _doc_char_ngrams_raw(docs, n).distinct()
-
-
 def ngram_jaccard_pairs(spark, sf_dir):
     """Char-n-gram Jaccard near-duplicate pairs: the deduplication modality
     that catches what WORD tokenization misses (in-word edits, punctuation
@@ -926,15 +878,8 @@ def embedding_cosine_topk(spark, sf_dir):
     first = emb.orderBy("vec_id").select("vec_id", "embedding").first()
     first_id, q_lit = first[0], F.lit(first[1])
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     e = F.col("embedding")
-    cos = dot(e, q_lit) / (F.sqrt(dot(e, e)) * F.sqrt(dot(q_lit, q_lit)))
+    cos = _dot(e, q_lit) / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(q_lit, q_lit)))
     return (
         # spread before the per-row cosine: the higher-order zip_with/
         # aggregate evaluates interpreted, and the single-row-group input
@@ -980,17 +925,10 @@ def embedding_ann_lsh(spark, sf_dir, n_planes: int = 8, topk: int = 20):
     )
     plane_lits = [F.array(*[F.lit(float(w)) for w in row]) for row in planes]
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     sig = None
     e = F.col("embedding")
     for p, pl in enumerate(plane_lits):
-        bit = F.when(dot(e, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bit = F.when(_dot(e, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         sig = bit if sig is None else sig + bit
     signed = emb.withColumn("sig", sig.cast("int"))
 
@@ -1002,7 +940,7 @@ def embedding_ann_lsh(spark, sf_dir, n_planes: int = 8, topk: int = 20):
     cand = signed.where(
         F.col("sig").isin(*probe_sigs) & (F.col("vec_id") != first_id)
     )
-    cos = dot(e, q_lit) / (F.sqrt(dot(e, e)) * F.sqrt(dot(q_lit, q_lit)))
+    cos = _dot(e, q_lit) / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(q_lit, q_lit)))
     return (
         cand.select("vec_id", F.round(cos, 4).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
@@ -1231,17 +1169,10 @@ def embedding_ann_batch(spark, sf_dir):
         for p in range(ANN_PLANES)
     ]
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     e = F.col("embedding")
     sig = None
     for p, pl in enumerate(planes):
-        bit = F.when(dot(e, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bit = F.when(_dot(e, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         sig = bit if sig is None else sig + bit
     signed = emb.select("vec_id", "embedding", sig.cast("int").alias("sig"))
 
@@ -1262,7 +1193,7 @@ def embedding_ann_batch(spark, sf_dir):
         F.col("vec_id") != F.col("q_id")
     )
     q = F.col("q_emb")
-    cos = dot(e, q) / (F.sqrt(dot(e, e)) * F.sqrt(dot(q, q)))
+    cos = _dot(e, q) / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(q, q)))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         cand.select("q_id", "vec_id", F.round(cos, 4).alias("cos_sim"))
@@ -1766,7 +1697,9 @@ def export_roundtrip(spark, sf_dir):
         ],
         "lang string, manifest_rows long",
     )
-    back = spark.read.parquet(out)
+    # the sample's schema, not inference: an empty sample writes no data
+    # file to infer from, and must read back as 0 rows
+    back = spark.read.schema(sample.schema).parquet(out)
     return (
         back.groupBy("lang")
         .agg(
@@ -1833,17 +1766,10 @@ def embedding_near_dup_pairs(spark, sf_dir):
         for p in range(ANN_PLANES)
     ]
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     e = F.col("embedding")
     sig = None
     for p, pl in enumerate(planes):
-        bit = F.when(dot(e, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bit = F.when(_dot(e, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         sig = bit if sig is None else sig + bit
     signed = emb.select("vec_id", "embedding", sig.cast("int").alias("sig"))
     # multi-probe admits pairs from singleton buckets, so eligibility is
@@ -1865,9 +1791,9 @@ def embedding_near_dup_pairs(spark, sf_dir):
     )
     b = capped.select("sig", F.col("vec_id").alias("vec_b"),
                       F.col("embedding").alias("emb_b"))
-    cos = dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt(dot(F.col("emb_a"), F.col("emb_a")))
-        * F.sqrt(dot(F.col("emb_b"), F.col("emb_b")))
+    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (
+        F.sqrt(_dot(F.col("emb_a"), F.col("emb_a")))
+        * F.sqrt(_dot(F.col("emb_b"), F.col("emb_b")))
     )
     return (
         a.join(b, "sig")
@@ -2180,13 +2106,14 @@ def topk_per_source(spark, sf_dir):
 # Image-modality training-data op: pHash NEAR-DUPLICATE pairs — the image
 # analogue of MinHash text dedup.  Two crawls of the same image (recompress,
 # resize, re-encode) produce perceptual hashes a few bits apart; exact-hash
-# dedup (O5) misses them.  Banded self-join: the 64-bit phash splits into
+# dedup (O5) misses them.  Banded buckets: the 64-bit phash splits into
 # PHASH_BANDS 16-bit bands; by pigeonhole, Hamming ≤ PHASH_MAX_HAMMING
-# implies at least one band matches exactly, so the (band, value) equi-join
-# finds EVERY true pair — recall 1.0, no all-pairs product — and the cheap
-# bit_count(xor) confirm rejects band-collision false positives JVM-side.
-# 100-TB shape: explode ×4, shuffle on (band, value), per-bucket cap
-# (PHASH_BUCKET_CAP) guards degenerate hot bands (e.g. flat-color images
+# implies at least one band matches exactly, so the pairs sharing a
+# (band, value) bucket include EVERY true pair — recall 1.0, no all-pairs
+# product — and the cheap bit_count(xor) confirm rejects band-collision
+# false positives JVM-side.  100-TB shape: explode ×4, one shuffle on
+# (band, value) through _capped_bucket_pairs, whose per-bucket cap
+# (PHASH_BUCKET_CAP) drops degenerate hot bands (e.g. flat-color images
 # sharing an all-zero band); everything is integer Catalyst — no UDF, no
 # float.  Oracle: INDEPENDENT brute-force popcount mirror
 # (oracle_fixtures.build_phash_near_dup — no banding), exact because the
@@ -2194,7 +2121,7 @@ def topk_per_source(spark, sf_dir):
 # binds at fixture scale.
 # ---------------------------------------------------------------------------
 def _phash_banded_pairs(sdf: DataFrame) -> DataFrame:
-    """(image_id, phash) → near-dup pairs via the banded self-join described
+    """(image_id, phash) → near-dup pairs via the banded buckets described
     above — shared by the precomputed-hash entry and the decode-from-bytes
     chain entry."""
     from .oracle_fixtures import (
@@ -2218,26 +2145,19 @@ def _phash_banded_pairs(sdf: DataFrame) -> DataFrame:
         "image_id", "phash", F.col("bv.band").alias("band"),
         F.col("bv.bval").alias("bval"),
     )
-    ok = (
-        keyed.groupBy("band", "bval")
-        .agg(F.count(F.lit(1)).alias("ct"))
-        .where(F.col("ct") <= PHASH_BUCKET_CAP)
-        .select("band", "bval")
+    pairs = _capped_bucket_pairs(
+        keyed, ["band", "bval"], F.struct("image_id", "phash"),
+        PHASH_BUCKET_CAP,
     )
-    capped = keyed.join(ok, ["band", "bval"])
-    a = capped.select(
-        "band", "bval",
-        F.col("image_id").alias("image_a"), F.col("phash").alias("ph_a"),
-    )
-    b = capped.select(
-        "band", "bval",
-        F.col("image_id").alias("image_b"), F.col("phash").alias("ph_b"),
-    )
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
+    ham = F.bit_count(F.col("lo.phash").bitwiseXOR(F.col("hi.phash")))
     return (
-        a.join(b, ["band", "bval"])
-        .where(F.col("image_a") < F.col("image_b"))
-        .select("image_a", "image_b", ham.cast("long").alias("hamming"))
+        # a repeated image_id never pairs with itself
+        pairs.where(F.col("lo.image_id") < F.col("hi.image_id"))
+        .select(
+            F.col("lo.image_id").alias("image_a"),
+            F.col("hi.image_id").alias("image_b"),
+            ham.cast("long").alias("hamming"),
+        )
         .where(F.col("hamming") <= PHASH_MAX_HAMMING)
         .distinct()
     )
@@ -2258,7 +2178,7 @@ def phash_near_dup_pairs(spark, sf_dir):
 # pHash near-dup from BYTES — the full image near-dup CHAIN, end-to-end:
 # decode the opaque payload with the engine codec (column-pruned Arrow
 # mapInPandas, the same kernel the crawl's payload validator runs), compute
-# phash64 from the decoded pixels, then the banded self-join above.  The
+# phash64 from the decoded pixels, then the banded pairs above.  The
 # precomputed-hash entry certifies the join; THIS entry certifies that the
 # engine's decode → hash stage feeds it correctly: the oracle mirror
 # recomputes every hash from the same bytes through the INDEPENDENT decoder
@@ -2266,8 +2186,8 @@ def phash_near_dup_pairs(spark, sf_dir):
 # all pairs.  Input: the shared T2 image corpus plus deterministic
 # re-encoded "second crawl" variants (same pixels, different lossy format
 # → hashes 0-1 bits apart).  100-TB shape: decode is map-only over pruned
-# (id, bytes) columns; the join shuffles 16-byte (band, bval) keys, never
-# payload bytes.
+# (id, bytes) columns; the bucket shuffle moves (band, bval) keys and
+# (image_id, phash) members, never payload bytes.
 # ---------------------------------------------------------------------------
 @q("phash_bytes_chain_pairs", _fx("phash_bytes_chain_pairs"))
 def phash_bytes_chain_pairs(spark, sf_dir):
@@ -2314,19 +2234,11 @@ def phash_bytes_chain_pairs(spark, sf_dir):
 # build_ann_ivf) mirroring fold order, the lexicographic argmax tie-break,
 # the integer-micro centroid means, and HALF_UP rounding.
 # ---------------------------------------------------------------------------
-def _ivf_dot(u, v):
-    return F.aggregate(
-        F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v_: acc + v_,
-    )
-
-
 def _ivf_cos_to(cv):
     e = F.col("embedding")
     lit = F.lit(cv)
-    return _ivf_dot(e, lit) / (
-        F.sqrt(_ivf_dot(e, e)) * F.sqrt(_ivf_dot(lit, lit))
+    return _dot(e, lit) / (
+        F.sqrt(_dot(e, e)) * F.sqrt(_dot(lit, lit))
     )
 
 
@@ -2418,8 +2330,8 @@ def embedding_ann_ivf(spark, sf_dir):
 
     q_lit = F.lit(qv)
     e = F.col("embedding")
-    cos_q = _ivf_dot(e, q_lit) / (
-        F.sqrt(_ivf_dot(e, e)) * F.sqrt(_ivf_dot(q_lit, q_lit))
+    cos_q = _dot(e, q_lit) / (
+        F.sqrt(_dot(e, e)) * F.sqrt(_dot(q_lit, q_lit))
     )
     return (
         emb.withColumn("cell", _ivf_assign_expr(cent_vecs).cast("int"))
@@ -2476,9 +2388,9 @@ def embedding_ann_ivf_batch(spark, sf_dir):
     cand = assigned.join(F.broadcast(qrows), "cell").where(
         F.col("vec_id") != F.col("q_id")
     )
-    cos = _ivf_dot(F.col("embedding"), F.col("q_emb")) / (
-        F.sqrt(_ivf_dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(_ivf_dot(F.col("q_emb"), F.col("q_emb")))
+    cos = _dot(F.col("embedding"), F.col("q_emb")) / (
+        F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+        * F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
@@ -2858,49 +2770,13 @@ def ngram_decontaminate(spark, sf_dir):
 # Batch membership is deterministic here (doc_id % 5 == 4 ≈ 20% of docs
 # stand in for "this cycle's crawl"); production passes a real batch table.
 #
-# 100-TB shape: both sides share ONE banded-signature build
-# (_minhash_melted — the corpus side's signatures would be precomputed
-# and stored in production); the bucket join touches only buckets holding
-# BOTH a batch and a corpus member, with the same hot-bucket cap as the
-# self-join, so cost scales with the BATCH, not corpus².  The confirm
-# broadcasts candidate pairs into the shingle scan (shared
-# _jaccard_confirm).  Oracle: independent pure-python mirror
+# 100-TB shape: the backfill pass's capped-bucket skeleton with a batch
+# predicate — batch and corpus share one signature build and the same
+# hot-bucket cap, and only pairs with exactly one batch end survive (the
+# corpus side's signatures would be precomputed and stored in
+# production).  Oracle: independent pure-python mirror
 # (oracle_fixtures.build_incremental_minhash) on the spec-XXH64.
 # ---------------------------------------------------------------------------
-def _lsh_bipartite_pairs(
-    shingles: DataFrame,
-    is_batch,
-    perms: int,
-    bands: int,
-    cap: int,
-    salt: str,
-) -> DataFrame:
-    melted = _minhash_melted(shingles, perms, bands, salt)
-    tagged = melted.withColumn("is_batch", is_batch)
-    stats = tagged.groupBy("b", "bucket").agg(
-        F.count(F.lit(1)).alias("ct"),
-        F.sum(F.col("is_batch").cast("int")).alias("n_batch"),
-    )
-    ok_buckets = stats.where(
-        (F.col("ct") <= cap)
-        & (F.col("n_batch") >= 1)
-        & (F.col("ct") > F.col("n_batch"))  # ≥1 corpus member too
-    ).select("b", "bucket")
-    capped = tagged.join(ok_buckets, ["b", "bucket"])
-    pairs = (
-        capped.where("is_batch")
-        .select("b", "bucket", F.col("doc_id").alias("doc_a"))
-        .join(
-            capped.where(~F.col("is_batch"))
-            .select("b", "bucket", F.col("doc_id").alias("doc_b")),
-            ["b", "bucket"],
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _jaccard_confirm(shingles, pairs)
-
-
 @q("incremental_minhash_dedup")
 def incremental_minhash_dedup(spark, sf_dir):
     from .oracle_fixtures import (
@@ -2911,13 +2787,10 @@ def incremental_minhash_dedup(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    out = _lsh_bipartite_pairs(
-        _doc_shingles(docs),
-        F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1,
-        MINHASH_PERMS,
-        MINHASH_BANDS,
-        MINHASH_BUCKET_CAP,
-        "p",
+    out = _lsh_jaccard_pairs(
+        docs, _doc_shingles_raw, _doc_shingle_arrays,
+        MINHASH_PERMS, MINHASH_BANDS, MINHASH_BUCKET_CAP, "p",
+        is_batch=F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1,
     )
     return out.select(
         F.col("doc_a").alias("batch_doc"),
@@ -3065,11 +2938,11 @@ def caption_dedup_generic(spark, sf_dir):
 # Composed image-corpus curation — the end-to-end pass a multimodal
 # training pipeline runs over crawled (image, caption) pairs, as ONE
 # entry: LAION-style filter -> generic-caption dedup among the filter's
-# survivors -> pHash near-dup keep-one (banded self-join + distributed
+# survivors -> pHash near-dup keep-one (banded bucket pairs + distributed
 # connected components, min-id canonical) among survivors of both.  Stage
 # flags are False for rows dropped upstream (the stage never saw them).
 # Shapes at 100 TB: scan-stage filter, broadcast caption dim, capped
-# banded join + O(log n) star iterations — no all-pairs product anywhere.
+# banded buckets + O(log n) star iterations — no all-pairs product anywhere.
 # Mirror: oracle_fixtures.build_image_training_pipeline (brute popcount +
 # union-find over the same planted corpus, incl. the hv%11==5 one-bit
 # pHash near-dup plants).

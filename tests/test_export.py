@@ -57,3 +57,26 @@ def test_write_training_shards_layout_and_manifest(spark):
             for r in spark.read.parquet(out2).select(*sample.columns).collect()
         }
         assert got2 == want
+
+
+def test_export_roundtrip_empty_sample(spark):
+    """A sample that keeps 0 documents writes no data file; the export
+    gate must read it back as 0 rows, not fail schema inference."""
+    import pandas as pd
+
+    from abwcf_spark.queries import export_roundtrip, training_pipeline_sample
+
+    with tempfile.TemporaryDirectory() as d:
+        pd.DataFrame({
+            "doc_id": [1, 2, 3],
+            "text": ["too short", "also short text", "x"],
+            "lang": ["en", "de", "fr"],
+            "source": ["s", "s", "t"],
+            "n_chars": [9, 15, 1],
+        }).to_parquet(f"{d}/documents.parquet")
+        assert training_pipeline_sample(spark, d).count() == 0
+        out = export_roundtrip(spark, d)
+        assert out.columns == [
+            "lang", "n_docs", "sum_tokens", "sum_removed", "manifest_rows",
+        ]
+        assert out.collect() == []

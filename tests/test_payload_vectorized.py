@@ -114,6 +114,26 @@ def test_phash64_batch_quantized_ties():
         assert (got == want).all(), (w, h)
 
 
+# shapes around numpy's 8192-element reduction buffer: 728×720 has
+# 8190-pixel blocks (batched), the others exceed it (scalar fallback)
+BIG_SHAPES = [(728, 720), (733, 731), (800, 800), (1024, 768), (768, 1024)]
+
+
+def test_phash64_batch_large_block_flat_sweep():
+    # a flat image ties every block mean with the threshold up to rounding,
+    # so any difference in float summation order flips bits; near-flat
+    # (one colour ± 2) images sit just off the tie
+    rng = np.random.default_rng(8192)
+    for w, h in BIG_SHAPES:
+        cols = rng.integers(0, 256, size=(8, 3))
+        flat = np.broadcast_to(cols[:, None, None, :], (8, h, w, 3))
+        near = cols[:2, None, None, :] + rng.integers(-2, 3, size=(2, h, w, 3))
+        stack = np.concatenate([flat, near.clip(0, 255)]).astype(np.uint8)
+        got = phash64_batch(stack)
+        want = np.asarray([phash64(im) for im in stack], dtype=np.int64)
+        assert (got == want).all(), (w, h, np.nonzero(got != want)[0])
+
+
 def test_decode_fast_paths_round_trip():
     for i, (w, h) in enumerate(SHAPES):
         px = gen_pixels(f"d-{i}", w, h)

@@ -241,13 +241,61 @@ def test_topk_per_source_is_two_phase_salted(spark):
 
 
 def test_phash_near_dup_no_cartesian(spark):
-    """The banded pHash self-join must stay an equi-join on (band, bval) —
-    never a cartesian/nested-loop product."""
+    """The banded pHash pairs must come from (band, bval) buckets — never
+    a cartesian/nested-loop product."""
     from abwcf_spark.queries import phash_near_dup_pairs
 
     p = plan(phash_near_dup_pairs(spark, _sf_dir("0.01")))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     assert "bit_count" in p  # integer confirm stays JVM-side
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _assert_cap_below_collect(df):
+    """Every collect_list aggregate must sit above the bucket-size filter,
+    so a hot bucket is dropped before its member list is collected."""
+    aggs = [
+        n for n in _plan_nodes(df._jdf.queryExecution().sparkPlan())
+        if "Aggregate" in n.nodeName() and "collect_list" in n.simpleString(100)
+    ]
+    assert aggs, "no collect_list aggregate in the plan"
+    for agg in aggs:
+        assert any(
+            n.nodeName() == "Filter" and "_ct" in n.simpleString(100)
+            for n in _plan_nodes(agg)
+        ), "bucket-size filter is not below collect_list"
+
+
+def test_bucket_cap_filters_before_collect(spark):
+    """Both near-dup pair paths.  minhash_lsh_candidates checkpoints its
+    pair table away, so its pair generation is rebuilt here the way the
+    query builds it."""
+    from abwcf_spark.oracle_fixtures import (
+        MINHASH_BANDS,
+        MINHASH_BUCKET_CAP,
+        MINHASH_PERMS,
+    )
+    from abwcf_spark.queries import (
+        _capped_bucket_pairs,
+        _doc_shingles_raw,
+        _minhash_melted,
+        phash_near_dup_pairs,
+    )
+
+    docs = spark.read.parquet(f"{_sf_dir('0.01')}/documents.parquet")
+    melted = _minhash_melted(
+        _doc_shingles_raw(docs), MINHASH_PERMS, MINHASH_BANDS, "p"
+    )
+    _assert_cap_below_collect(_capped_bucket_pairs(
+        melted, ["b", "bucket"], F.col("doc_id"), MINHASH_BUCKET_CAP
+    ))
+    _assert_cap_below_collect(phash_near_dup_pairs(spark, _sf_dir("0.01")))
 
 
 def test_embedding_ann_ivf_is_joinless_scan(spark):

@@ -709,8 +709,9 @@ def test_incremental_minhash_bipartite_semantics(spark):
     ingest pass); every reported edge is batch→corpus oriented."""
     from abwcf_spark.oracle_fixtures import INC_BATCH_MOD
     from abwcf_spark.queries import (
-        _doc_shingles,
-        _lsh_bipartite_pairs,
+        _doc_shingle_arrays,
+        _doc_shingles_raw,
+        _lsh_jaccard_pairs,
     )
     from pyspark.sql import functions as F
 
@@ -727,10 +728,9 @@ def test_incremental_minhash_bipartite_semantics(spark):
         (20, "tiny unrelated"),                  # corpus, disjoint
     ]
     sdf = spark.createDataFrame(docs, "doc_id long, text string")
-    out = _lsh_bipartite_pairs(
-        _doc_shingles(sdf),
-        F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1,
-        8, 4, 50, "p",
+    out = _lsh_jaccard_pairs(
+        sdf, _doc_shingles_raw, _doc_shingle_arrays, 8, 4, 50, "p",
+        is_batch=F.col("doc_id") % INC_BATCH_MOD == INC_BATCH_MOD - 1,
     ).collect()
     edges = {(r.doc_a, r.doc_b) for r in out}
     assert (14, 10) in edges and (14, 11) in edges
